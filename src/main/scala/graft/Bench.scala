@@ -14,9 +14,9 @@ object Bench {
     * connected-components localCheckpoint + broadcast blocks are reclaimed
     * only when driver GC feeds the ContextCleaner's weak-reference queue.
     * Dropping the sink views is safe mid-query-family: every execution
-    * names a fresh view, and the memoized caches (ivfCodebooks,
-    * verifiedPairCache, staged dirs) are strongly referenced TrieMaps the
-    * cleaner never touches.
+    * names a fresh view, and memoized state lives in SparkEntry's
+    * [[Memo]] registry, which holds its values strongly until a family is
+    * evicted — the cleaner never touches it.
     */
   private def dropStreamSinks(spark: SparkSession): Unit =
     spark.catalog.listTables().collect()
@@ -112,18 +112,18 @@ object Bench {
     // a broken query reads as a performance win in the emitted JSON.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS=$runs must be >= 1")
-    // Last-use map for the heavy memo families: once the final consumer of
-    // a family (in this run's sorted, possibly filtered order) has been
-    // timed, drop the family's strong references so the per-query GC below
-    // actually reclaims its checkpoint blocks — instead of every family's
-    // blocks riding along to the end of the run and inflating later heavy
-    // queries (the round-7 2×-vs-isolated residue on link_predict).
+    // Last-use map for the frame-holding memo families: once the final
+    // consumer of a family (in this run's sorted, possibly filtered order)
+    // has been timed, evict the family — its checkpoint blocks are
+    // unpersisted instead of riding along to the end of the run and
+    // inflating later heavy queries (the round-7 2×-vs-isolated residue on
+    // link_predict).
     val evictAfter: Map[String, Seq[() => Unit]] =
       SparkEntry.memoFamilies.flatMap { case (_, users, evict) =>
         ordered.map(_._1).filter(users).lastOption.map(_ -> evict)
       }.groupBy(_._1).map { case (q, es) => q -> es.map(_._2) }
-    // First-use warming, symmetric to the last-use eviction (round-8 task
-    // 6): a memo family's checkpoint blocks are built during the warmup
+    // First-use warming, symmetric to the last-use eviction: a memo
+    // family's checkpoint blocks are built during the warmup
     // sweep at the top of the run, but by the time timing reaches the
     // family — possibly a minute of other queries, cache clears, and GCs
     // later — those blocks may have spilled to disk and the family's
@@ -167,8 +167,8 @@ object Bench {
       }
       // Per-QUERY cleaner settle, also outside any timed region:
       // clearCache() drops any CacheManager entries a query registered,
-      // family eviction releases memo checkpoints whose last consumer was
-      // this query, and settleCleaner both feeds the ContextCleaner's
+      // family eviction unpersists memo checkpoints whose last consumer
+      // was this query, and settleCleaner both feeds the ContextCleaner's
       // weak-ref queue AND waits for it to drain, so dead localCheckpoint
       // RDD blocks and broadcasts from this query's executions are
       // actually reclaimed instead of shifting later queries'
@@ -197,11 +197,19 @@ object Bench {
     val total = results
       .map { case (_, t) => if (t.contains(-1.0)) -1.0 else t.min }
       .filter(_ >= 0).sum
+    // Memo build cost, which warmup and min-of-N keep out of "queries":
+    // wall seconds of every build, per family (and per extra key, e.g.
+    // one staged fixture), in build order.
+    val builds = SparkEntry.memoBuilds
+    val memoBuilds = builds.map(_._1).distinct.map { k =>
+      s"\"$k\":" + builds.collect { case (`k`, sec) => sec }
+        .mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     // "cpus" rides along so scripts/adjudicate.sh can re-run isolated
     // queries under the SAME parallelism as the full run it adjudicates —
     // a local[4]-vs-local[32] mismatch would masquerade as contamination.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"sf":"$sfDir","cpus":"$cpus"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"memo_builds":$memoBuilds,"sf":"$sfDir","cpus":"$cpus"}"""
     println(line)
     // Durability: the driver captures stdout with a bounded tail, which
     // has truncated past rounds' per-query entries — the file is the

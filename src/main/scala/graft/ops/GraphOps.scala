@@ -400,26 +400,6 @@ object GraphOps {
     else probe
   }
 
-  /** Rows of a wave-scale frame collected to the driver when they fit
-    * `cap`, else None: one count job decides (the same count the
-    * checkpointed spelling pays anyway), one collect delivers — never a
-    * `limit()`, whose escalating partition sweep (1, 4, 16, … — each
-    * round a separate job) measurably COSTS more jobs than it saves on
-    * multi-partition frames. The LOCAL representation is what makes a
-    * tiny peel wave cheap — a LocalRelation re-consumes, filters, and
-    * BROADCASTS with zero further Spark jobs (a BroadcastExchange over
-    * a LocalTableScan collects driver-side), so the per-wave fixed cost
-    * drops from ~a dozen scheduled jobs (checkpoints + counts +
-    * broadcast materializations) to the genuinely distributed passes.
-    * Call it on cheap-to-re-execute plans (filters over a checkpoint) —
-    * the two jobs each run the plan once. Driver posture: the wave
-    * BROADCAST decision already collects up to `broadcastRem` rows to
-    * the driver, so a cap at or below it adds no new memory class.
-    */
-  private def tryCollectLocal(df: DataFrame, cap: Long)
-    : Option[Array[org.apache.spark.sql.Row]] =
-    if (df.count() <= cap) Some(df.collect()) else None
-
   /** Run `f` with adaptive execution OFF (set/restore — the
     * runStreamToTable bracket discipline). For a PROVABLY wave-bounded
     * plan whose joins are all broadcast-hinted, AQE has no decision
@@ -439,8 +419,16 @@ object GraphOps {
     try f finally spark.conf.set(key, before)
   }
 
-  /** A LocalRelation-backed frame over driver-held rows (zero-job
-    * consumption — see [[tryCollectLocal]]). */
+  /** A LocalRelation-backed frame over driver-held rows. The LOCAL
+    * representation is what makes a tiny peel wave cheap — a
+    * LocalRelation re-consumes, filters, and BROADCASTS with zero further
+    * Spark jobs (a BroadcastExchange over a LocalTableScan collects
+    * driver-side), so the per-wave fixed cost drops from ~a dozen
+    * scheduled jobs (checkpoints + counts + broadcast materializations)
+    * to the genuinely distributed passes. Rows arrive by count + collect,
+    * never a `limit()`, whose escalating partition sweep (1, 4, 16, … —
+    * each round a separate job) measurably COSTS more jobs than it saves
+    * on multi-partition frames. */
   private def localDf(spark: org.apache.spark.sql.SparkSession,
                       rows: Array[org.apache.spark.sql.Row],
                       schema: org.apache.spark.sql.types.StructType)
@@ -651,6 +639,25 @@ object GraphOps {
     tri
   }
 
+  /** Edge count up to which a [[triangleList]] is a safe
+    * materialization. Past it triangles can grow far superlinearly in
+    * edges, and the streaming enumeration is the only path — the 100 TB
+    * one. Edge-count-derived, never core-count. */
+  val TriRetainEdges: Long = 4000000L
+
+  /** [[triangleList]] of `e` when it has at most `cap` edges, else None —
+    * the guard every retained triangle list sits behind. */
+  private[graft] def triangleListUpTo(e: DataFrame,
+      cap: Long = TriRetainEdges): Option[DataFrame] =
+    if (e.count() <= cap) Some(triangleList(e)) else None
+
+  /** Per-node triangle counts off a retained list when there is one
+    * ([[triangleCountsOfList]]), else by the streaming enumeration
+    * ([[triangleCountsOf]]) — identical tallies either way. */
+  private[graft] def triangleCountsVia(e: DataFrame, deg: DataFrame,
+      tri: Option[DataFrame]): DataFrame =
+    tri.fold(triangleCountsOf(e, deg))(triangleCountsOfList(_, deg))
+
   /** [[triangleCountsOf]] read off a pre-built [[triangleList]]: the
     * per-node explode + tally + degree attach, no enumeration. Output
     * identical to [[triangleCountsOf]] on the same edge list (both
@@ -719,7 +726,7 @@ object GraphOps {
   def trussOf(e: DataFrame, k: Long, maxPeels: Int = 12,
               broadcastRem: Long = 5000000L,
               driverWaveCap: Long = 65536L,
-              triRetainEdges: Long = 4000000L,
+              triRetainEdges: Long = TriRetainEdges,
               sharedTriangles: Option[DataFrame] = None): DataFrame = {
     require(k >= 3, s"k=$k must be at least 3 (the smallest truss)")
     require(maxPeels >= 1, s"maxPeels=$maxPeels must be positive")
@@ -761,7 +768,7 @@ object GraphOps {
     // overhead — the heavy enumeration re-widens inside edgeSupports.
     //
     // The accumulators and the frontier live DRIVER-LOCAL whenever they
-    // fit `driverWaveCap` ([[tryCollectLocal]] — at or below the row
+    // fit `driverWaveCap` ([[localDf]] — at or below the row
     // count the wave broadcast already collects to the driver): a tail
     // wave's fixed cost was ~a dozen scheduled jobs (five eager
     // checkpoints, a count, and several broadcast materializations of

@@ -287,19 +287,29 @@ object ScaleOps {
     * safe at 100 TB (a static-mode overwrite would wipe the WHOLE
     * directory on every retry).
     *
-    * The overwrite mode is set for this write only and restored —
-    * partitionOverwriteMode is session-wide state a library must not
-    * leak into its caller's other writes.
+    * The overwrite mode is a per-write option, never the session-wide
+    * `spark.sql.sources.partitionOverwriteMode`: a library must not
+    * change its caller's other writes, including concurrent ones.
     */
   def backfillPartitions(df: DataFrame, dir: String,
-                         partCol: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val before = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally spark.conf.set(key, before)
-  }
+                         partCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(dir)
+
+  /** Drop each managed table AND its warehouse directory. Overwrite must
+    * win even when only the DIRECTORY survived: a fresh session's
+    * in-memory catalog has no entry for the name, but the warehouse
+    * directory outlives the previous JVM, and saveAsTable's create path
+    * refuses an occupied location (LOCATION_ALREADY_EXISTS —
+    * mode=overwrite only helps when the catalog knows the table).
+    */
+  private[graft] def dropTables(s: SparkSession, tables: String*): Unit =
+    tables.foreach { t =>
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      val loc = new org.apache.hadoop.fs.Path(
+        s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
+      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    }
 
   /** Bucketed co-located join setup: write both sides bucketed by the join
     * key so the join needs no exchange at read time (each bucket pair joins
@@ -317,17 +327,7 @@ object ScaleOps {
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                     buckets: Int): Unit = {
     require(bucketCols.nonEmpty, "writeBucketed needs at least one column")
-    // Overwrite must win even when only the DIRECTORY survived: a fresh
-    // session's in-memory catalog has no entry for the name, but the
-    // warehouse directory outlives the previous JVM, and saveAsTable's
-    // create path refuses an occupied location (LOCATION_ALREADY_EXISTS —
-    // mode=overwrite only helps when the catalog knows the table). Drop
-    // both halves of any stale state before writing.
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    dropTables(df.sparkSession, table)
     df.write.mode("overwrite")
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)

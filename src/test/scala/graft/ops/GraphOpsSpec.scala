@@ -290,6 +290,32 @@ class GraphOpsSpec extends SparkTestBase {
     assert(tri.count() === 5L)
   }
 
+  test("triangle list edge cap: past it both triangle consumers stream, same results") {
+    // the K4 + two pendant triangles of the trussOf spec: 10 edges
+    val e = GraphOps.canonicalEdges(
+      (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)) ++
+        Seq((3L, 5L), (4L, 5L)) ++ Seq((4L, 6L), (5L, 6L)))
+        .toDF("a", "b"), "a", "b")
+    val deg = GraphOps.nodeDegrees(e)
+    val listed = GraphOps.triangleListUpTo(e)
+    assert(listed.map(_.count()) === Some(6L))
+    assert(GraphOps.triangleListUpTo(e, cap = 10L).isDefined)
+    val tinyCap = 9L
+    val capped = GraphOps.triangleListUpTo(e, cap = tinyCap)
+    assert(capped.isEmpty)
+    def counts(tri: Option[org.apache.spark.sql.DataFrame]) =
+      GraphOps.triangleCountsVia(e, deg, tri).orderBy("node")
+        .as[(Long, Long, Long)].collect().toSeq
+    assert(counts(capped) === counts(listed))
+    assert(counts(capped) === GraphOps.triangleCountsOf(e, deg)
+      .orderBy("node").as[(Long, Long, Long)].collect().toSeq)
+    def truss(tri: Option[org.apache.spark.sql.DataFrame], cap: Long) =
+      GraphOps.trussOf(e, k = 4, maxPeels = 3, triRetainEdges = cap,
+        sharedTriangles = tri).orderBy("u", "v")
+        .as[(Long, Long, Long)].collect().toSeq
+    assert(truss(capped, tinyCap) === truss(listed, GraphOps.TriRetainEdges))
+  }
+
   test("bfsHopsOf: hub source (max degree, min id), hop truncation exact") {
     // edges 1−2, 1−3, 3−4, 4−5: degrees 1:2, 3:2, 4:2, 2:1, 5:1 — the
     // (d desc, n) source pick is node 1; hops 0/1/1/2/3.

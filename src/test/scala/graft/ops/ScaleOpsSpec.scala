@@ -152,6 +152,19 @@ class ScaleOpsSpec extends SparkTestBase {
       == (1 to 10000).map(_.toLong).sum)
   }
 
+  test("backfillPartitions replaces only the frame's partitions, session conf untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+    Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    ScaleOps.backfillPartitions(Seq((9L, "a")).toDF("id", "p"), dir, "p")
+    assert(spark.conf.get(key) === before)
+    // partition a replaced, partition b byte-untouched
+    assert(spark.read.parquet(dir).orderBy("id").as[(Long, String)]
+      .collect().toSeq === Seq((3L, "b"), (9L, "a")))
+  }
+
   test("saltedSum equals the plain aggregation") {
     val df = (1 to 10000).map(i => (if (i % 100 == 0) "hot" else s"k${i % 7}", i.toDouble))
       .toDF("k", "v")
