@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops._
 import graft.functions.{MomentsAgg, Similarity, TextFunctions}
@@ -558,15 +559,18 @@ object SparkEntry {
       |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
       |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin
 
-  /** The documents table framed as an opaque media table — the shared
-    * input of the three media_* graded queries (one definition, not three
-    * drifting projections).
+  /** Document rows framed as an opaque media table — the shared input of
+    * the media_* graded queries and the frame streaming loop (one
+    * definition, not drifting projections).
     */
-  private def documentsAsMedia(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(
+  private def asMedia(docs: DataFrame): DataFrame =
+    docs.select(
       col("doc_id").as("media_id"),
       lit("text/plain").as("mime"),
       col("text").cast("binary").as("bytes"))
+
+  private def documentsAsMedia(s: SparkSession, d: String): DataFrame =
+    asMedia(Tables.documents(s, d))
 
   /** One oracle for both alternate-format legs: DuckDB reads the ORIGINAL
     * parquet events — if a format leg drops rows, shifts timestamps past
@@ -580,11 +584,6 @@ object SparkEntry {
       |FROM (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS __cents FROM events) e
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Shared aggregation for the alternate-format ingestion queries: the
-    * same weekly count + exact-cents sum regardless of which format the
-    * events came back from — one definition so the two format legs grade
-    * the identical contract.
-    */
   /** Every memo below is a family of this registry; [[memoFamilies]] is
     * read off it.
     */
@@ -838,7 +837,25 @@ object SparkEntry {
     staged(s, d, "events-stream")(
       Tables.events(s, d).write.mode("overwrite").parquet(_))
 
-  private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** A landing dir a file stream tails, with the schema of the frame
+    * staged there — the stream reads it with no schema-inference pass.
+    */
+  private final case class StreamFeed(dir: String, schema: StructType)
+
+  private val streamFeeds = memo[StreamFeed]("stream_feed")
+
+  /** `frame` staged once as a parquet landing dir (see [[staged]]): the
+    * ingest fixture of a [[ingestMicroBatches]] loop. Each fixture is
+    * range-partitioned into three files, so a file stream reading one
+    * file per trigger delivers it as three micro-batches.
+    */
+  private def stagedFeed(s: SparkSession, d: String, name: String)(
+      frame: => DataFrame): StreamFeed =
+    streamFeeds(s, d, name) {
+      val f = frame
+      StreamFeed(staged(s, d, name)(f.write.mode("overwrite").parquet(_)),
+        f.schema)
+    }
 
   /** The drift-gate ingest fixture: the doc_id%10==5 slice stamped with
     * an explicit `batch_id = (doc_id div 10) % 3` and RANGE-partitioned
@@ -846,14 +863,13 @@ object SparkEntry {
     * files, which is what makes each micro-batch's per-batch PSI
     * COMPLETE whatever the file→trigger mapping.
     */
-  private def stagedQpsiBatches(s: SparkSession, d: String): String =
-    staged(s, d, "qpsi-stream")(
+  private def stagedQpsiBatches(s: SparkSession, d: String): StreamFeed =
+    stagedFeed(s, d, "qpsi-stream")(
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) === 5)
         .select(col("doc_id"), col("lang"), col("text"),
           expr("(doc_id div 10) % 3").as("batch_id"))
-        .repartitionByRange(3, col("batch_id"))
-        .write.mode("overwrite").parquet(_))
+        .repartitionByRange(3, col("batch_id")))
 
   /** The embedding drift-gate ingest fixture — [[stagedQpsiBatches]] in
     * embedding space: the vec_id%10==5 slice stamped with batch_id =
@@ -861,14 +877,13 @@ object SparkEntry {
     * batch_id never splits across files and each micro-batch's PSI
     * readout is complete whatever the file→trigger mapping.
     */
-  private def stagedEpsiBatches(s: SparkSession, d: String): String =
-    staged(s, d, "epsi-stream")(
+  private def stagedEpsiBatches(s: SparkSession, d: String): StreamFeed =
+    stagedFeed(s, d, "epsi-stream")(
       Tables.embeddings(s, d)
         .where(pmod(col("vec_id"), lit(10)) === 5)
         .select(col("vec_id"), col("embedding"),
           expr("(vec_id div 10) % 3").as("batch_id"))
-        .repartitionByRange(3, col("batch_id"))
-        .write.mode("overwrite").parquet(_))
+        .repartitionByRange(3, col("batch_id")))
 
   /** The decontamination gate's frozen state: DISTINCT 8-gram digests of
     * the held-out eval slice (doc_id%10==7) as a digest-bucketed table —
@@ -892,52 +907,45 @@ object SparkEntry {
       mt
     }
 
-  /** The graded near-dup BATCH slice staged as a 3-file parquet dir so a
-    * file stream delivers it as three micro-batches (maxFilesPerTrigger
-    * 1) — the streaming-ingest fixture for `stream_neardup_incremental`.
+  /** The graded near-dup BATCH slice — the streaming-ingest fixture for
+    * `stream_neardup_incremental` (and the bpe / decontamination gates).
     * Range-partitioned by doc_id for a deterministic file split; the
     * emitted pair SET is delivery-order-invariant anyway (each pair is
     * found exactly once: internally when both docs share a micro-batch,
     * else when the later doc probes the manifest that already holds the
     * earlier one).
     */
-  private def stagedDocBatches(s: SparkSession, d: String): String =
-    staged(s, d, "docs-stream")(
+  private def stagedDocBatches(s: SparkSession, d: String): StreamFeed =
+    stagedFeed(s, d, "docs-stream")(
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) === 1 && col("doc_id") < 10000
           && pmod(expr("doc_id div 10"), lit(2)) === 1)
-        .repartitionByRange(3, col("doc_id"))
-        .write.mode("overwrite").parquet(_))
+        .repartitionByRange(3, col("doc_id")))
 
-  /** The cosine BATCH half staged as a 3-file parquet dir — the
-    * streaming-ingest fixture for `stream_cosine_incremental`, the
-    * embedding analog of [[stagedDocBatches]]. Range-partitioned by
-    * vec_id for a deterministic file split; the emitted pair SET is
-    * delivery-order-invariant for the same reason (each pair is found
-    * exactly once — internally if the two vectors share a micro-batch,
-    * else when the later one probes the manifest already holding the
-    * earlier).
+  /** The cosine BATCH half — the streaming-ingest fixture for
+    * `stream_cosine_incremental`, the embedding analog of
+    * [[stagedDocBatches]]. Range-partitioned by vec_id for a
+    * deterministic file split; the emitted pair SET is
+    * delivery-order-invariant for the same reason.
     */
-  private def stagedEmbBatches(s: SparkSession, d: String): String =
-    staged(s, d, "emb-stream")(
+  private def stagedEmbBatches(s: SparkSession, d: String): StreamFeed =
+    stagedFeed(s, d, "emb-stream")(
       Tables.embeddings(s, d)
         .where(col("vec_id") < 2000 && pmod(col("vec_id"), lit(2)) === 1)
-        .repartitionByRange(3, col("vec_id"))
-        .write.mode("overwrite").parquet(_))
+        .repartitionByRange(3, col("vec_id")))
 
-  /** The SimHash BATCH half (odd ids of the full corpus) staged as a
-    * 3-file parquet dir — the streaming-ingest fixture for
-    * `stream_simhash_incremental`. Delivery-order-invariant like its
+  /** The SimHash BATCH half (odd ids of the full corpus) — the
+    * streaming-ingest fixture for `stream_simhash_incremental` and the
+    * frame, winnow and CDC loops. Delivery-order-invariant like its
     * siblings; here additionally LOSSLESS (pigeonhole banding), so the
     * streamed union grades against the exact Hamming truth, not a
     * contract boolean.
     */
-  private def stagedSimhashBatches(s: SparkSession, d: String): String =
-    staged(s, d, "simhash-stream")(
+  private def stagedSimhashBatches(s: SparkSession, d: String): StreamFeed =
+    stagedFeed(s, d, "simhash-stream")(
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(2)) === 1)
-        .repartitionByRange(3, col("doc_id"))
-        .write.mode("overwrite").parquet(_))
+        .repartitionByRange(3, col("doc_id")))
 
   /** Events re-staged once per format into a temp dir — the
     * alternate-format ingestion fixtures (ORC, JSON lines). The graded
@@ -1453,14 +1461,6 @@ object SparkEntry {
   /** (family[/extra], wall seconds) of every memo build so far. */
   def memoBuilds: Seq[(String, Double)] = memo.builds
 
-  /** Drive a finite streaming frame to completion through a memory sink
-    * and hand back the result as a batch frame. `processAllAvailable`
-    * drains the file source AND the trailing no-data micro-batch where
-    * event-time timeouts fire (pinned by StreamingAndMultimodalSpec), so
-    * watermark-final emissions are all present before the table is read.
-    * Unique query names keep bench re-runs from colliding on the temp
-    * view.
-    */
   /** Materialize a streaming loop's RESULT eagerly, then drop the
     * loop's per-run working tables. Each loop creates up to three
     * warehouse tables per invocation (manifest-so-far, corpus-so-far,
@@ -1507,6 +1507,18 @@ object SparkEntry {
     out
   }
 
+  /** Numbers every streaming run, so its sink view or working tables get
+    * names no earlier run in this JVM used. */
+  private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Drive a finite streaming frame to completion through a memory sink
+    * and hand back the result as a batch frame. `processAllAvailable`
+    * drains the file source AND the trailing no-data micro-batch where
+    * event-time timeouts fire (pinned by StreamingAndMultimodalSpec), so
+    * watermark-final emissions are all present before the table is read.
+    * Unique query names keep bench re-runs from colliding on the temp
+    * view.
+    */
   private def runStreamToTable(s: SparkSession, df: DataFrame, name: String,
       mode: org.apache.spark.sql.streaming.OutputMode =
         org.apache.spark.sql.streaming.OutputMode.Append): DataFrame = {
@@ -1528,6 +1540,132 @@ object SparkEntry {
       finally s.conf.set("spark.sql.shuffle.partitions", before)
     try q.processAllAvailable() finally q.stop()
     s.table(qn)
+  }
+
+  /** What one loop hands [[ingestMicroBatches]]. `pin` derives the frame
+    * each micro-batch checkpoints: the raw batch, or its fingerprint frame
+    * where only fingerprints feed the probe and the append (pinning the
+    * batch there would compute the fingerprints twice). `each` runs the
+    * batch's probe and appends off the pinned frame. `result` reads the
+    * drained working tables.
+    */
+  private final case class MicroBatchLoop(
+      each: DataFrame => Unit,
+      result: () => DataFrame,
+      pin: DataFrame => DataFrame = identity)
+
+  /** The micro-batch ingest driver of every `stream_*` loop that grows
+    * working tables. A staged feed arrives one file per trigger
+    * (`maxFilesPerTrigger=1`); each micro-batch probes the state so far,
+    * emits only its new rows, and grows the state.
+    *
+    * The working tables are `graft_stream_<tag>_<role>_<run>`, one per
+    * role, under the next run number. Stale same-name leftovers are
+    * dropped first: the run counter restarts per JVM while the warehouse
+    * persists across JVMs. `loop` seeds the tables (handed over in
+    * `roles` order) and returns the per-batch work. Each batch's pinned
+    * frame is checkpointed once, since it feeds the probe and every
+    * append, and unpersisted when the batch ends. The result is
+    * materialized before the working tables are dropped.
+    *
+    * The contract every loop keeps, stated once here:
+    *  - Emit BEFORE the state append, so a batch never probes its own
+    *    rows (its internal pairs are already emitted).
+    *  - Probe with EMPTY known pairs per batch. Emissions are new pairs
+    *    only, so their union with the read-back pair list needs no dedup.
+    *  - Refresh in the OUTER session. A foreachBatch write goes through
+    *    the micro-batch's cloned session and refreshes only the clone's
+    *    relation cache. The outer session, whose `s.table` plans the next
+    *    probe, would keep serving the stale pre-append file listing, and
+    *    later batches would silently probe the seed state only (measured:
+    *    148 missing cross-batch pairs in stream_neardup_incremental at
+    *    sf0.001). The driver refreshes every working table after every
+    *    batch, so no loop can miss one.
+    */
+  private def ingestMicroBatches(s: SparkSession, feed: StreamFeed,
+      tag: String, roles: String*)(
+      loop: Seq[String] => MicroBatchLoop): DataFrame = {
+    val run = streamRuns.incrementAndGet()
+    val tables = roles.map(r => s"graft_stream_${tag}_${r}_$run")
+    ScaleOps.dropTables(s, tables: _*)
+    val l = loop(tables)
+    val src = s.readStream.schema(feed.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.dir)
+    val q = graft.streaming.EventsStreaming
+      .foreachBatchWriter(src, b => l.pin(b).localCheckpoint(true)) {
+        (pinned, _) =>
+          try {
+            l.each(pinned)
+            tables.foreach(s.catalog.refreshTable)
+          } finally Dedup.unpersistCheckpoint(pinned)
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    materializeAndDropTables(s, l.result(), tables: _*)
+  }
+
+  /** The deployed drift gate of stream_quality_psi and stream_embed_psi:
+    * every micro-batch is scored per `batch_id` stamp against the FROZEN
+    * `reference` snapshot (checkpointed once — the histogram a production
+    * gate pins at deploy time), appending `psi(reference, stamp rows)`
+    * tagged with the stamp. A stamp never splits across staged files, so
+    * each readout is complete. Result rows are keyed (batch_id, `key`).
+    */
+  private def streamDriftPsi(s: SparkSession, feed: StreamFeed, tag: String,
+      reference: DataFrame, key: String)(
+      psi: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ref = reference.localCheckpoint(true)
+    ingestMicroBatches(s, feed, tag, "out") { case Seq(outS) =>
+      // seeded with the empty readout, so a drained stream always leaves
+      // a readable table
+      psi(ref.limit(0), ref.limit(0)).withColumn("batch_id", lit(0L))
+        .limit(0).write.saveAsTable(outS)
+      MicroBatchLoop(
+        // <=3 distinct stamps by construction — a bounded collect
+        each = b => b.select("batch_id").distinct().collect()
+          .map(_.getLong(0)).sorted.foreach { bid =>
+            psi(ref, b.where(col("batch_id") === bid))
+              .withColumn("batch_id", lit(bid))
+              .write.mode("append").saveAsTable(outS)
+          },
+        result = () => s.table(outS)
+          .select(Seq("batch_id", key, "n_bins", "n_a", "n_b", "psi")
+            .map(col): _*)
+          .orderBy("batch_id", key))
+    }
+  }
+
+  /** The winnow and CDC streaming loops, which differ only in their
+    * fingerprints: each micro-batch fingerprints only ITS documents (the
+    * pinned frame), probes the manifest-so-far under the frozen
+    * blocklist, and appends its blocklist-filtered fingerprints bucketed
+    * like the persisted manifest. A pair emits exactly once, when its
+    * later document arrives, and by then the earlier document's
+    * fingerprints are all in the manifest — so the streamed shared_fp
+    * counts equal the batch-incremental ones whatever the delivery order.
+    */
+  private def streamFingerprintPairs(s: SparkSession, feed: StreamFeed,
+      tag: String, state: (String, String, String))(
+      fingerprints: DataFrame => DataFrame): DataFrame = {
+    val (mt, bt, pt) = state
+    ingestMicroBatches(s, feed, tag, "manifest", "pairs") {
+      case Seq(mtS, outS) =>
+        ScaleOps.writeBucketed(s.table(mt).repartition(8, col("fp_hash")),
+          mtS, Seq("fp_hash"), buckets = 8)
+        s.table(pt).limit(0).write.saveAsTable(outS)
+        MicroBatchLoop(
+          pin = fingerprints,
+          each = fp => {
+            CorpusOps.incrementalWinnowPairsOnState(fp, s.table(mtS),
+              s.table(bt), s.table(pt).limit(0), minShared = 2L)
+              .write.mode("append").saveAsTable(outS)
+            ScaleOps.appendBucketed(
+              fp.join(s.table(bt), Seq("fp_hash"), "left_anti"),
+              mtS, Seq("fp_hash"), buckets = 8)
+          },
+          result = () => s.table(pt).select("id_a", "id_b", "shared_fp")
+            .unionByName(s.table(outS).select("id_a", "id_b", "shared_fp")))
+    }.orderBy("id_a", "id_b")
   }
 
   /** Clustered-synthetic embedding corpus, derived deterministically
@@ -2616,7 +2754,7 @@ object SparkEntry {
         .select(col("doc_id"), (col("__p0") + 1).cast("long").as("pos"),
           col("token_id"))
         .orderBy("doc_id", "pos")),
-    // The tokenizer DEPLOYED: a foreachBatch ingest loop encodes every
+    // The tokenizer DEPLOYED: a micro-batch ingest loop encodes every
     // arriving micro-batch against the FROZEN full-corpus BPE model
     // (train once at deploy — the memoized model; ids are a property of
     // the model, a novel symbol raises rather than shifting shipped
@@ -2625,21 +2763,15 @@ object SparkEntry {
     // segmentation, so ingest-time tokenization is proven equal to the
     // batch encode id-for-id.
     "stream_bpe_encode" -> ((s, d) => {
-      val run = streamRuns.incrementAndGet()
-      val outS = s"graft_bpe_out_$run"
       val model = bpeModel(s, d)
-      Tables.documents(s, d).limit(0)
-        .select(col("doc_id"), lit(0L).as("n_tokens"),
-          lit(0L).as("id_dot"))
-        .write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedDocBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            CorpusOps.bpeEncodeIds(bb, "doc_id", "text", model)
+      ingestMicroBatches(s, stagedDocBatches(s, d), "bpe", "out") {
+        case Seq(outS) =>
+          Tables.documents(s, d).limit(0)
+            .select(col("doc_id"), lit(0L).as("n_tokens"),
+              lit(0L).as("id_dot"))
+            .write.saveAsTable(outS)
+          MicroBatchLoop(
+            each = b => CorpusOps.bpeEncodeIds(b, "doc_id", "text", model)
               .select(col("doc_id"),
                 size(col("token_ids")).cast("long").as("n_tokens"),
                 aggregate(zip_with(col("token_ids"),
@@ -2647,13 +2779,9 @@ object SparkEntry {
                       size(col("token_ids")).cast("long")),
                     (t, i) => t.cast("long") * i),
                   lit(0L), (a, x) => a + x).as("id_dot"))
-              .write.mode("append").saveAsTable(outS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(outS).orderBy("doc_id"), outS)
+              .write.mode("append").saveAsTable(outS),
+            result = () => s.table(outS).orderBy("doc_id"))
+      }
     }),
     // packSequences fed REAL encoded-sequence lengths (size(token_ids))
     // instead of whitespace estimates — the id materialization and the
@@ -3403,39 +3531,31 @@ object SparkEntry {
     // once — per-doc rows are delivery-order-invariant by construction,
     // so the oracle replays the whole gate over the same slice.
     "stream_decontaminate" -> ((s, d) => {
-      val run = streamRuns.incrementAndGet()
-      val outS = s"graft_deconta_out_$run"
       val mt = decontamState(s, d)
-      Tables.documents(s, d).limit(0)
-        .select(col("doc_id"), lit(0L).as("n_shared_ngrams"),
-          lit(false).as("contaminated"))
-        .write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedDocBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            val hits = CorpusOps.ngramSet(bb, "doc_id", "text", n = 8)
-              .select(col("doc_id"),
-                md5(col("gram").cast("binary")).as("g"))
-              .join(s.table(mt), Seq("g"))
-              .groupBy(col("doc_id"))
-              .agg(count(lit(1)).as("n_shared_ngrams"))
-            bb.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("n_shared_ngrams"), lit(0L))
-                  .as("n_shared_ngrams"),
-                (coalesce(col("n_shared_ngrams"), lit(0L)) > 0)
-                  .as("contaminated"))
-              .write.mode("append").saveAsTable(outS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(outS).orderBy("doc_id"), outS)
+      ingestMicroBatches(s, stagedDocBatches(s, d), "deconta", "out") {
+        case Seq(outS) =>
+          Tables.documents(s, d).limit(0)
+            .select(col("doc_id"), lit(0L).as("n_shared_ngrams"),
+              lit(false).as("contaminated"))
+            .write.saveAsTable(outS)
+          MicroBatchLoop(
+            each = b => {
+              val hits = CorpusOps.ngramSet(b, "doc_id", "text", n = 8)
+                .select(col("doc_id"),
+                  md5(col("gram").cast("binary")).as("g"))
+                .join(s.table(mt), Seq("g"))
+                .groupBy(col("doc_id"))
+                .agg(count(lit(1)).as("n_shared_ngrams"))
+              b.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
+                .select(col("doc_id"),
+                  coalesce(col("n_shared_ngrams"), lit(0L))
+                    .as("n_shared_ngrams"),
+                  (coalesce(col("n_shared_ngrams"), lit(0L)) > 0)
+                    .as("contaminated"))
+                .write.mode("append").saveAsTable(outS)
+            },
+            result = () => s.table(outS).orderBy("doc_id"))
+      }
     }),
     // Benchmark decontamination: flag train-split docs sharing any 8-token
     // n-gram with the held-out test split (the GPT-3-style collision
@@ -3861,64 +3981,19 @@ object SparkEntry {
         "text", "lang")
         .orderBy("lang")
     }),
-    // The drift monitor DEPLOYED: a foreachBatch ingest gate that scores
-    // every arriving micro-batch's per-language quality histogram
-    // against a FROZEN reference snapshot (computed once, checkpointed —
-    // the histogram a production gate pins at deploy time) and appends
-    // the per-(batch, lang) PSI readout — exactly
-    // CorpusOps.qualityDriftPsi per batch, which is the graded claim.
+    // The drift monitor DEPLOYED ([[streamDriftPsi]]): every arriving
+    // micro-batch's per-language quality histogram is scored against a
+    // frozen reference snapshot — exactly CorpusOps.qualityDriftPsi per
+    // batch, which is the graded claim.
     // Batch membership is the deterministic (doc_id div 10) % 3 stamp
     // (range-partitioned staging keeps a batch whole per file), so the
     // oracle replays every batch's full quality pipeline AND PSI
     // arithmetic term-for-term.
-    "stream_quality_psi" -> ((s, d) => {
-      val run = streamRuns.incrementAndGet()
-      val outS = s"graft_qpsi_out_$run"
-      val docs = Tables.documents(s, d)
-      val reference = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .localCheckpoint(true)
-      // seed the result table with the empty schema so a drained stream
-      // always leaves a readable table
-      CorpusOps.qualityDriftPsi(reference.limit(0), reference.limit(0),
-          "text", "lang")
-        .withColumn("batch_id", lit(0L)).limit(0)
-        .write.saveAsTable(outS)
-      val src = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedQpsiBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            // <=3 distinct stamps by construction — a bounded collect
-            val bids = bb.select("batch_id").distinct()
-              .collect().map(_.getLong(0)).sorted
-            bids.foreach { bid =>
-              CorpusOps.qualityDriftPsi(reference,
-                  bb.where(col("batch_id") === bid), "text", "lang")
-                .withColumn("batch_id", lit(bid))
-                .write.mode("append").saveAsTable(outS)
-            }
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(outS).select(col("batch_id"), col("lang"), col("n_bins"),
-          col("n_a"), col("n_b"), col("psi"))
-          .orderBy("batch_id", "lang"),
-        outS)
-    }),
+    "stream_quality_psi" -> ((s, d) =>
+      streamDriftPsi(s, stagedQpsiBatches(s, d), "qpsi",
+        Tables.documents(s, d).where(pmod(col("doc_id"), lit(10)) === 0)
+          .select(col("doc_id"), col("lang"), col("text")), "lang")(
+        CorpusOps.qualityDriftPsi(_, _, "text", "lang"))),
     // Gopher-style within-document repetition filters: duplicate-token and
     // duplicate-bigram fractions (per-row expressions) + most-frequent-
     // token dominance (explode + two hash-aggs).
@@ -4033,81 +4108,49 @@ object SparkEntry {
         "doc_id", "text", threshold = 0.5)
         .orderBy("id_a", "id_b")
     }),
-    // The STREAMING ingest loop closed over the same persisted state:
-    // the batch slice arrives as THREE micro-batches (file stream,
-    // maxFilesPerTrigger=1); every micro-batch probes the
-    // manifest-so-far (seeded from the persisted bucketed manifest,
-    // grown by each batch's own banded rows), verifies candidates
-    // against the corpus-so-far, and emits only its NEW pairs — the
-    // existing corpus is never re-signed, never re-self-joined, and no
-    // micro-batch re-finds a prior batch's pairs. The union of the
-    // read-back known-pair list and all micro-batch emissions must
-    // hash-match the same full-corpus truth oracle the batch
-    // incremental variants grade against: streaming-incremental ==
+    // The STREAMING ingest loop ([[ingestMicroBatches]]) closed over the
+    // same persisted state: the batch slice arrives as three
+    // micro-batches, each verifying its candidates against the
+    // corpus-so-far — the existing corpus is never re-signed, never
+    // re-self-joined. The union of the read-back known-pair list and all
+    // emissions must hash-match the same full-corpus truth oracle the
+    // batch incremental variants grade against: streaming-incremental ==
     // batch-incremental == full.
     "stream_neardup_incremental" -> ((s, d) => {
       val slice = Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) === 1 && col("doc_id") < 10000)
-      val existing0 = slice.where(pmod(expr("doc_id div 10"), lit(2)) === 0)
       val (mt, pt) = neardupState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_nd_manifest_$run"
-      val corpusS = s"graft_stream_nd_corpus_$run"
-      val outS = s"graft_stream_nd_pairs_$run"
-      // stream-local state: manifest seeded from the persisted table,
-      // corpus-so-far seeded with the existing half, output empty.
-      // Drop stale same-name leftovers first — the run counter restarts
-      // per JVM while the warehouse persists across them (the
-      // neardupState discipline).
-      ScaleOps.dropTables(s, corpusS, outS)
-      // the working manifest keeps the persisted table's (band, bucket)
-      // bucket layout — seeded bucketed and grown bucketed, so every
-      // micro-batch probe reads the GROWING manifest exchange-free like
-      // the batch-persisted variant (a plain saveAsTable copy would
-      // re-shuffle it on every probe); writeBucketed drops stale state
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("band"), col("bucket")),
-        mtS, Seq("band", "bucket"), buckets = 8)
-      existing0.write.saveAsTable(corpusS)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedDocBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          // the micro-batch feeds the probe, the manifest update, and
-          // the corpus append — pin it once (and free it after)
-          val bb = b.localCheckpoint(true)
-          try {
-            // knownPairs EMPTY per batch: emissions are new pairs only,
-            // so the cross-batch union needs no dedup pass
-            Dedup.incrementalNearDupPairsOnState(bb, s.table(mtS),
-              s.table(pt).limit(0), s.table(corpusS), "doc_id", "text",
-              threshold = 0.5)
-              .write.mode("append").saveAsTable(outS)
-            // state update AFTER the emit, so a batch never probes its
-            // own banded rows (its internal pairs are already counted)
-            ScaleOps.appendBucketed(Dedup.bandManifest(bb, "doc_id", "text"),
-              mtS, Seq("band", "bucket"), buckets = 8)
-            bb.write.mode("append").saveAsTable(corpusS)
-            // the micro-batch frame writes through its own CLONED
-            // session, which refreshes only the clone's relation cache —
-            // the outer session (whose s.table() plans the next probe)
-            // would keep serving the stale pre-append file listing, so
-            // later micro-batches would silently probe the seed manifest
-            // only (measured: 148 missing cross-batch pairs at sf0.001)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(corpusS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(pt).select("id_a", "id_b", "shared", "jaccard")
-          .unionByName(
-            s.table(outS).select("id_a", "id_b", "shared", "jaccard")),
-        mtS, corpusS, outS)
-        .orderBy("id_a", "id_b")
+      ingestMicroBatches(s, stagedDocBatches(s, d), "nd",
+          "manifest", "corpus", "pairs") {
+        case Seq(mtS, corpusS, outS) =>
+          // manifest seeded from the persisted table, corpus-so-far with
+          // the existing half, output empty. The working manifest keeps
+          // the persisted (band, bucket) layout — seeded and grown
+          // bucketed, so every probe reads the GROWING manifest
+          // exchange-free like the batch-persisted variant (a plain
+          // saveAsTable copy would re-shuffle it on every probe)
+          ScaleOps.writeBucketed(
+            s.table(mt).repartition(8, col("band"), col("bucket")),
+            mtS, Seq("band", "bucket"), buckets = 8)
+          slice.where(pmod(expr("doc_id div 10"), lit(2)) === 0)
+            .write.saveAsTable(corpusS)
+          s.table(pt).limit(0).write.saveAsTable(outS)
+          MicroBatchLoop(
+            each = b => {
+              Dedup.incrementalNearDupPairsOnState(b, s.table(mtS),
+                s.table(pt).limit(0), s.table(corpusS), "doc_id", "text",
+                threshold = 0.5)
+                .write.mode("append").saveAsTable(outS)
+              ScaleOps.appendBucketed(
+                Dedup.bandManifest(b, "doc_id", "text"),
+                mtS, Seq("band", "bucket"), buckets = 8)
+              b.write.mode("append").saveAsTable(corpusS)
+            },
+            result = () =>
+              s.table(pt).select("id_a", "id_b", "shared", "jaccard")
+                .unionByName(
+                  s.table(outS).select("id_a", "id_b", "shared", "jaccard")))
+      }.orderBy("id_a", "id_b")
     }),
     // MinHash estimator quality, oracle-gated: DuckDB recomputes the
     // exhaustive exact-jaccard truth set (n_truth must hash-match) and
@@ -4192,45 +4235,31 @@ object SparkEntry {
     // streaming == batch-incremental == full == truth, all by hash.
     "stream_simhash_incremental" -> ((s, d) => {
       val (mt, pt) = simhashState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_sh_manifest_$run"
-      val outS = s"graft_stream_sh_pairs_$run"
-      ScaleOps.dropTables(s, outS)
-      // seed + grow the working manifest BUCKETED on (band, bval) — the
-      // persisted table's layout — so each micro-batch probe reads the
-      // growing manifest exchange-free (the batch-persisted variant's
-      // pinned property); writeBucketed drops stale same-name state
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("band"), col("bval")),
-        mtS, Seq("band", "bval"), buckets = 8)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedSimhashBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            // fingerprints travel IN the manifest rows, so no
-            // corpus-so-far table exists at all: the probe verifies
-            // Hamming distance from (a.sh, b.sh) directly
-            Dedup.incrementalSimhashPairsOnState(bb, s.table(mtS),
-              s.table(pt).limit(0), "doc_id", "text", maxHamming = 3)
-              .write.mode("append").saveAsTable(outS)
-            ScaleOps.appendBucketed(
-              Dedup.simhashBandManifest(bb, "doc_id", "text",
-                maxHamming = 3),
-              mtS, Seq("band", "bval"), buckets = 8)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(pt).select("id_a", "id_b", "hamming")
-          .unionByName(s.table(outS).select("id_a", "id_b", "hamming")),
-        mtS, outS)
-        .orderBy("id_a", "id_b")
+      ingestMicroBatches(s, stagedSimhashBatches(s, d), "sh",
+          "manifest", "pairs") {
+        case Seq(mtS, outS) =>
+          // the working manifest keeps the persisted (band, bval) layout,
+          // so each probe reads the growing manifest exchange-free
+          ScaleOps.writeBucketed(
+            s.table(mt).repartition(8, col("band"), col("bval")),
+            mtS, Seq("band", "bval"), buckets = 8)
+          s.table(pt).limit(0).write.saveAsTable(outS)
+          MicroBatchLoop(
+            each = b => {
+              // fingerprints travel IN the manifest rows, so no
+              // corpus-so-far table exists at all: the probe verifies
+              // Hamming distance from (a.sh, b.sh) directly
+              Dedup.incrementalSimhashPairsOnState(b, s.table(mtS),
+                s.table(pt).limit(0), "doc_id", "text", maxHamming = 3)
+                .write.mode("append").saveAsTable(outS)
+              ScaleOps.appendBucketed(
+                Dedup.simhashBandManifest(b, "doc_id", "text",
+                  maxHamming = 3),
+                mtS, Seq("band", "bval"), buckets = 8)
+            },
+            result = () => s.table(pt).select("id_a", "id_b", "hamming")
+              .unionByName(s.table(outS).select("id_a", "id_b", "hamming")))
+      }.orderBy("id_a", "id_b")
     }),
     // SimHash quality companion, oracle-gated end to end: the SAME
     // Hamming-LSH banding join as simhash_hamming (shared
@@ -4469,62 +4498,39 @@ object SparkEntry {
         .orderBy("media_a", "frame_a_ms", "media_b", "frame_b_ms")
     }),
     // The FOURTH modality's streaming loop — frames close the set:
-    // MinHash, cosine-SRP, SimHash, and now aHash frames all run the
-    // same micro-batch shape (probe the manifest-so-far, emit only NEW
-    // pairs, append your own band rows AFTER the emit, refresh the
-    // outer session's relation cache). The odd-media half arrives as
-    // three file-stream batches; each batch decodes its own frames
-    // only (the even half is never re-decoded — fingerprints travel IN
-    // the manifest). Pigeonhole banding is lossless, so the union of
+    // MinHash, cosine-SRP, SimHash, and now aHash frames all run on
+    // [[ingestMicroBatches]]. Each batch decodes its own frames only
+    // (the even half is never re-decoded — fingerprints travel IN the
+    // manifest). Pigeonhole banding is lossless, so the union of
     // the read-back pair list and all emissions grades against the
     // SAME brute-force Hamming truth as frame_neardup_ahash:
     // streaming == batch-incremental == full == truth, all by hash.
     "stream_frame_incremental" -> ((s, d) => {
       val (mt, pt) = frameState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_fr_manifest_$run"
-      val outS = s"graft_stream_fr_pairs_$run"
-      ScaleOps.dropTables(s, outS)
-      // working manifest seeded + grown BUCKETED on (band, bval) — the
-      // persisted table's layout, so every probe reads the growing
-      // manifest exchange-free; writeBucketed drops stale state
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("band"), col("bval")),
-        mtS, Seq("band", "bval"), buckets = 8)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      // the odd-doc staging dir doubles as the odd-MEDIA feed (media_id
-      // = doc_id); each micro-batch projects its rows to media and
-      // fingerprints its own frames only
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedSimhashBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val fp = graft.multimodal.MultimodalOps.frameFingerprints(
-            b.select(col("doc_id").as("media_id"),
-              lit("text/plain").as("mime"),
-              col("text").cast("binary").as("bytes")),
-            everyMs = 60000L).localCheckpoint(true)
-          try {
-            // knownPairs EMPTY per batch: emissions are new pairs only
-            Dedup.incrementalHammingPairsOnState(fp, s.table(mtS),
-              s.table(pt).limit(0), maxHamming = 3)
-              .write.mode("append").saveAsTable(outS)
-            // state update AFTER the emit, so a batch never probes its
-            // own band rows
-            ScaleOps.appendBucketed(
-              Dedup.hammingBandManifestOf(fp, maxHamming = 3),
-              mtS, Seq("band", "bval"), buckets = 8)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(fp)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      graft.multimodal.MultimodalOps.decodeFramePairKeys(
-        materializeAndDropTables(s,
-          s.table(pt).select("id_a", "id_b", "hamming")
-            .unionByName(s.table(outS).select("id_a", "id_b", "hamming")),
-          mtS, outS),
+      // the odd-doc feed doubles as the odd-MEDIA feed (media_id =
+      // doc_id): each micro-batch pins the fingerprints of its own frames
+      val streamed = ingestMicroBatches(s, stagedSimhashBatches(s, d), "fr",
+          "manifest", "pairs") {
+        case Seq(mtS, outS) =>
+          ScaleOps.writeBucketed(
+            s.table(mt).repartition(8, col("band"), col("bval")),
+            mtS, Seq("band", "bval"), buckets = 8)
+          s.table(pt).limit(0).write.saveAsTable(outS)
+          MicroBatchLoop(
+            pin = b => graft.multimodal.MultimodalOps.frameFingerprints(
+              asMedia(b), everyMs = 60000L),
+            each = fp => {
+              Dedup.incrementalHammingPairsOnState(fp, s.table(mtS),
+                s.table(pt).limit(0), maxHamming = 3)
+                .write.mode("append").saveAsTable(outS)
+              ScaleOps.appendBucketed(
+                Dedup.hammingBandManifestOf(fp, maxHamming = 3),
+                mtS, Seq("band", "bval"), buckets = 8)
+            },
+            result = () => s.table(pt).select("id_a", "id_b", "hamming")
+              .unionByName(s.table(outS).select("id_a", "id_b", "hamming")))
+      }
+      graft.multimodal.MultimodalOps.decodeFramePairKeys(streamed,
         everyMs = 60000L)
         .orderBy("media_a", "frame_a_ms", "media_b", "frame_b_ms")
     }),
@@ -5193,64 +5199,20 @@ object SparkEntry {
         .orderBy("p")
     }),
     // The embedding drift monitor DEPLOYED — stream_quality_psi's twin in
-    // representation space: a foreachBatch ingest gate that projects every
-    // arriving micro-batch onto the frozen ±1 directions and scores its
-    // per-direction histogram against a FROZEN reference snapshot
-    // (vec_id%10==0, checkpointed once — the histogram a production gate
-    // pins when the embedder version freezes), appending the per-(batch,
-    // direction) PSI readout — exactly EmbeddingOps.embeddingDriftPsi per
-    // batch, which is the graded claim. Batch membership is the
+    // representation space: every arriving micro-batch is projected onto
+    // the frozen ±1 directions and its per-direction histogram scored
+    // against the vec_id%10==0 reference — exactly
+    // EmbeddingOps.embeddingDriftPsi per batch, which is the graded
+    // claim. Batch membership is the
     // deterministic (vec_id div 10) % 3 stamp (range-partitioned staging
     // keeps a stamp whole per file), so the oracle replays every batch's
     // projection, binning, and PSI arithmetic term-for-term.
-    "stream_embed_psi" -> ((s, d) => {
-      val run = streamRuns.incrementAndGet()
-      val outS = s"graft_epsi_out_$run"
-      val reference = Tables.embeddings(s, d)
-        .where(pmod(col("vec_id"), lit(10)) === 0)
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true)
-      // seed the result table with the empty schema so a drained stream
-      // always leaves a readable table
-      EmbeddingOps.embeddingDriftPsi(reference.limit(0), reference.limit(0),
-          "embedding", dims = 64, projections = 4, binWidth = 0.5)
-        .withColumn("batch_id", lit(0L)).limit(0)
-        .write.saveAsTable(outS)
-      val src = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType)),
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedEpsiBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            // <=3 distinct stamps by construction — a bounded collect
-            val bids = bb.select("batch_id").distinct()
-              .collect().map(_.getLong(0)).sorted
-            bids.foreach { bid =>
-              EmbeddingOps.embeddingDriftPsi(reference,
-                  bb.where(col("batch_id") === bid),
-                  "embedding", dims = 64, projections = 4, binWidth = 0.5)
-                .withColumn("batch_id", lit(bid))
-                .write.mode("append").saveAsTable(outS)
-            }
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(outS).select(col("batch_id"), col("p"), col("n_bins"),
-          col("n_a"), col("n_b"), col("psi"))
-          .orderBy("batch_id", "p"),
-        outS)
-    }),
+    "stream_embed_psi" -> ((s, d) =>
+      streamDriftPsi(s, stagedEpsiBatches(s, d), "epsi",
+        Tables.embeddings(s, d).where(pmod(col("vec_id"), lit(10)) === 0)
+          .select(col("vec_id"), col("embedding")), "p")(
+        EmbeddingOps.embeddingDriftPsi(_, _, "embedding", dims = 64,
+          projections = 4, binWidth = 0.5))),
     // Incremental ingest for the THIRD near-dup modality: the batch half
     // probes the persisted (tbl, bkt)-bucketed SRP manifest and the
     // read-back pair list — the existing corpus is never re-projected
@@ -5297,63 +5259,40 @@ object SparkEntry {
           (coalesce(col("__extra"), lit(0L)) === 0L).as("precision_ok"))
     }),
     // The STREAMING ingest loop closed over the cosine tier's persisted
-    // state — the embedding analog of stream_neardup_incremental: three
-    // micro-batches each probe the SRP manifest-so-far, verify against
-    // the corpus-so-far, emit only NEW pairs, and append their own
-    // banded rows; the existing corpus is never re-projected. The union
+    // state — the embedding analog of stream_neardup_incremental; the
+    // existing corpus is never re-projected. The union
     // of the read-back pair list and all emissions carries the same
     // contract row as incremental_cosine_persisted — with the set
     // identity now proving streaming == full.
     "stream_cosine_incremental" -> ((s, d) => {
       val slice = Tables.embeddings(s, d).where(col("vec_id") < 2000)
-      val existing0 = slice.where(pmod(col("vec_id"), lit(2)) === 0)
       val (mt, pt) = cosineState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_cos_manifest_$run"
-      val corpusS = s"graft_stream_cos_corpus_$run"
-      val outS = s"graft_stream_cos_pairs_$run"
-      ScaleOps.dropTables(s, corpusS, outS)
-      // seed + grow the working manifest BUCKETED on (tbl, bkt) — the
-      // persisted SRP table's layout — so each micro-batch probe reads
-      // the growing manifest exchange-free (the batch-persisted
-      // variant's pinned property); writeBucketed drops stale state
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("tbl"), col("bkt")),
-        mtS, Seq("tbl", "bkt"), buckets = 8)
-      existing0.write.saveAsTable(corpusS)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.embeddings(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedEmbBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val bb = b.localCheckpoint(true)
-          try {
-            // knownPairs EMPTY per batch: emissions are new pairs only
-            graft.functions.Similarity.cosineNearDupPairsOnState(bb,
-              s.table(mtS), s.table(pt).limit(0), s.table(corpusS),
-              "vec_id", "embedding", threshold = 0.4, bits = 4,
-              tables = 24)
-              .write.mode("append").saveAsTable(outS)
-            // state update AFTER the emit, so a batch never probes its
-            // own banded rows
-            ScaleOps.appendBucketed(
-              graft.functions.Similarity.srpBandRows(bb, "vec_id",
-                "embedding", bits = 4, tables = 24),
-              mtS, Seq("tbl", "bkt"), buckets = 8)
-            bb.write.mode("append").saveAsTable(corpusS)
-            // refresh the OUTER session's relation cache (foreachBatch
-            // writes go through the micro-batch's cloned session)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(corpusS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(bb)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      val streamed = materializeAndDropTables(s,
-        s.table(pt).select("id_a", "id_b", "cos_sim")
-          .unionByName(s.table(outS).select("id_a", "id_b", "cos_sim")),
-        mtS, corpusS, outS)
+      val streamed = ingestMicroBatches(s, stagedEmbBatches(s, d), "cos",
+          "manifest", "corpus", "pairs") {
+        case Seq(mtS, corpusS, outS) =>
+          // the working manifest keeps the persisted SRP (tbl, bkt)
+          // layout, so each probe reads the growing manifest exchange-free
+          ScaleOps.writeBucketed(
+            s.table(mt).repartition(8, col("tbl"), col("bkt")),
+            mtS, Seq("tbl", "bkt"), buckets = 8)
+          slice.where(pmod(col("vec_id"), lit(2)) === 0)
+            .write.saveAsTable(corpusS)
+          s.table(pt).limit(0).write.saveAsTable(outS)
+          MicroBatchLoop(
+            each = b => {
+              Similarity.cosineNearDupPairsOnState(b, s.table(mtS),
+                s.table(pt).limit(0), s.table(corpusS), "vec_id",
+                "embedding", threshold = 0.4, bits = 4, tables = 24)
+                .write.mode("append").saveAsTable(outS)
+              ScaleOps.appendBucketed(
+                Similarity.srpBandRows(b, "vec_id", "embedding", bits = 4,
+                  tables = 24),
+                mtS, Seq("tbl", "bkt"), buckets = 8)
+              b.write.mode("append").saveAsTable(corpusS)
+            },
+            result = () => s.table(pt).select("id_a", "id_b", "cos_sim")
+              .unionByName(s.table(outS).select("id_a", "id_b", "cos_sim")))
+      }
       val (truthPairs, full) = cosineTruthAndFull(s, d)
       val truth = truthPairs
         .select(col("id_a"), col("id_b"), lit(1).as("__t"))
@@ -5878,56 +5817,15 @@ object SparkEntry {
         s.table(bt), s.table(pt), minShared = 2L)
         .orderBy("id_a", "id_b")
     }),
-    // The FIFTH streaming loop — every dedup modality now has one: the
-    // odd half arrives as three micro-batches, each winnows only ITS
-    // documents, probes the manifest-so-far under the frozen blocklist,
-    // emits only NEW pairs, and appends its (blocklist-filtered)
-    // fingerprints bucketed AFTER the emit. shared_fp counts are
-    // delivery-order-invariant: a pair is emitted exactly once, when
-    // its later document arrives, and by then the earlier document's
-    // fingerprints are all in the manifest — so the streamed union
-    // carries the same exact counts and grades against the SAME
-    // frozen-blocklist full-run oracle as the batch incremental.
-    "stream_winnow_incremental" -> ((s, d) => {
-      val (mt, bt, pt) = winnowState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_wn_manifest_$run"
-      val outS = s"graft_stream_wn_pairs_$run"
-      ScaleOps.dropTables(s, outS)
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("fp_hash")),
-        mtS, Seq("fp_hash"), buckets = 8)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedSimhashBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val fp = CorpusOps.winnowFingerprints(b, "doc_id", "text",
-            k = 3, w = 4)
-            .select(col("doc_id").as("id"), col("fp_hash")).distinct()
-            .localCheckpoint(true)
-          try {
-            // knownPairs EMPTY per batch: emissions are new pairs only
-            CorpusOps.incrementalWinnowPairsOnState(fp, s.table(mtS),
-              s.table(bt), s.table(pt).limit(0), minShared = 2L)
-              .write.mode("append").saveAsTable(outS)
-            // state update AFTER the emit (a batch never probes its own
-            // rows), blocklist-filtered like the persisted manifest
-            ScaleOps.appendBucketed(
-              fp.join(s.table(bt), Seq("fp_hash"), "left_anti"),
-              mtS, Seq("fp_hash"), buckets = 8)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(fp)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(pt).select("id_a", "id_b", "shared_fp")
-          .unionByName(s.table(outS).select("id_a", "id_b", "shared_fp")),
-        mtS, outS)
-        .orderBy("id_a", "id_b")
-    }),
+    // The FIFTH streaming loop — every dedup modality now has one
+    // ([[streamFingerprintPairs]] over winnow fingerprints). It grades
+    // against the SAME frozen-blocklist full-run oracle as the batch
+    // incremental.
+    "stream_winnow_incremental" -> ((s, d) =>
+      streamFingerprintPairs(s, stagedSimhashBatches(s, d), "wn",
+          winnowState(s, d))(
+        CorpusOps.winnowFingerprints(_, "doc_id", "text", k = 3, w = 4)
+          .select(col("doc_id").as("id"), col("fp_hash")).distinct())),
     // The MOSS match report at CDC chunk granularity: pairs meet on the
     // content-defined chunk digest (shift-resistant, so an edited copy
     // keeps matching); over-common chunks dropped first, pair survives
@@ -5952,51 +5850,12 @@ object SparkEntry {
         s.table(bt), s.table(pt), minShared = 2L)
         .orderBy("id_a", "id_b")
     }),
-    // The SIXTH streaming loop: the odd half arrives as three
-    // micro-batches, each chunks only ITS documents, probes the
-    // manifest-so-far under the frozen blocklist, emits only NEW pairs,
-    // appends its digests bucketed AFTER the emit. Delivery-order
-    // invariance holds by the winnow argument: a pair emits exactly
-    // once, when its later document arrives, by which time the earlier
-    // document's digests are all in the manifest.
-    "stream_cdc_incremental" -> ((s, d) => {
-      val (mt, bt, pt) = cdcState(s, d)
-      val run = streamRuns.incrementAndGet()
-      val mtS = s"graft_stream_cdc_manifest_$run"
-      val outS = s"graft_stream_cdc_pairs_$run"
-      ScaleOps.dropTables(s, outS)
-      ScaleOps.writeBucketed(
-        s.table(mt).repartition(8, col("fp_hash")),
-        mtS, Seq("fp_hash"), buckets = 8)
-      s.table(pt).limit(0).write.saveAsTable(outS)
-      val src = s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedSimhashBatches(s, d))
-      val q = graft.streaming.EventsStreaming
-        .foreachBatchWriter(src, identity) { (b, _) =>
-          val fp = CorpusOps.cdcFingerprints(b, "doc_id", "text")
-            .localCheckpoint(true)
-          try {
-            // knownPairs EMPTY per batch: emissions are new pairs only
-            CorpusOps.incrementalWinnowPairsOnState(fp, s.table(mtS),
-              s.table(bt), s.table(pt).limit(0), minShared = 2L)
-              .write.mode("append").saveAsTable(outS)
-            // state update AFTER the emit (a batch never probes its own
-            // rows), blocklist-filtered like the persisted manifest
-            ScaleOps.appendBucketed(
-              fp.join(s.table(bt), Seq("fp_hash"), "left_anti"),
-              mtS, Seq("fp_hash"), buckets = 8)
-            s.catalog.refreshTable(mtS)
-            s.catalog.refreshTable(outS)
-          } finally Dedup.unpersistCheckpoint(fp)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      materializeAndDropTables(s,
-        s.table(pt).select("id_a", "id_b", "shared_fp")
-          .unionByName(s.table(outS).select("id_a", "id_b", "shared_fp")),
-        mtS, outS)
-        .orderBy("id_a", "id_b")
-    }),
+    // The SIXTH streaming loop: [[streamFingerprintPairs]] over CDC
+    // chunk digests instead of winnow fingerprints.
+    "stream_cdc_incremental" -> ((s, d) =>
+      streamFingerprintPairs(s, stagedSimhashBatches(s, d), "cdc",
+          cdcState(s, d))(
+        CorpusOps.cdcFingerprints(_, "doc_id", "text"))),
     // The EXCISION half of the same method: first global occurrence of
     // each duplicated 15-token span survives, later occurrences mark
     // their token ranges, position-level union excises them, documents
@@ -7093,6 +6952,25 @@ object SparkEntry {
       |fp AS (SELECT DISTINCT doc_id, substr(s, 1, 32) AS fp_hash,
       |    1000000000000 - CAST(substr(s, 33, 13) AS BIGINT) AS fp_pos
       |  FROM sel WHERE pos <= greatest(kk - 3, 1))""".stripMargin
+
+  /** Full-corpus winnow pair replay with the over-common cut FROZEN to
+    * the even half (the state-build corpus) — the engine's manifest +
+    * blocklist + known-pairs union for both the batch-incremental and the
+    * streaming loop: streaming == batch-incremental == full.
+    */
+  private val winnowIncrementalOracle: String = winnowFpCte +
+    """,
+      |fpd AS (SELECT DISTINCT doc_id, fp_hash FROM fp),
+      |blk AS (SELECT fp_hash FROM (
+      |    SELECT fp_hash, count(DISTINCT doc_id) AS df FROM fpd
+      |    WHERE doc_id % 2 = 0 GROUP BY 1)
+      |  WHERE df > 50),
+      |kept AS (SELECT doc_id, fp_hash FROM fpd
+      |  WHERE fp_hash NOT IN (SELECT fp_hash FROM blk))
+      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+      |  CAST(count(*) AS BIGINT) AS shared_fp
+      |FROM kept a JOIN kept b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
+      |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin
 
   /** Pack-efficiency oracle: the SAME replayed layout as
     * [[bpePackIdsOracle]] (shared CTE chain through c2), aggregated per
@@ -10798,37 +10676,8 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS shared_fp
         |FROM kept a JOIN kept b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
-    // Incremental replay: the SAME full-corpus pair set, with the
-    // over-common cut frozen to the even half (the state-build corpus) —
-    // exactly the engine's manifest + blocklist + known-pairs union.
-    "incremental_winnow_persisted" -> (winnowFpCte +
-      """,
-        |fpd AS (SELECT DISTINCT doc_id, fp_hash FROM fp),
-        |blk AS (SELECT fp_hash FROM (
-        |    SELECT fp_hash, count(DISTINCT doc_id) AS df FROM fpd
-        |    WHERE doc_id % 2 = 0 GROUP BY 1)
-        |  WHERE df > 50),
-        |kept AS (SELECT doc_id, fp_hash FROM fpd
-        |  WHERE fp_hash NOT IN (SELECT fp_hash FROM blk))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS shared_fp
-        |FROM kept a JOIN kept b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
-    // streaming == batch-incremental == full under the same frozen cut:
-    // the loop's union grades against the identical replay.
-    "stream_winnow_incremental" -> (winnowFpCte +
-      """,
-        |fpd AS (SELECT DISTINCT doc_id, fp_hash FROM fp),
-        |blk AS (SELECT fp_hash FROM (
-        |    SELECT fp_hash, count(DISTINCT doc_id) AS df FROM fpd
-        |    WHERE doc_id % 2 = 0 GROUP BY 1)
-        |  WHERE df > 50),
-        |kept AS (SELECT doc_id, fp_hash FROM fpd
-        |  WHERE fp_hash NOT IN (SELECT fp_hash FROM blk))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS shared_fp
-        |FROM kept a JOIN kept b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
+    "incremental_winnow_persisted" -> winnowIncrementalOracle,
+    "stream_winnow_incremental" -> winnowIncrementalOracle,
     // Excision replay by span TEXT (engine uses digests — the hash match
     // is also a collision check): same global (doc, pos) first-survivor
     // rule, same position-level union, same reassembly.

@@ -68,13 +68,6 @@ object CoreOps {
   def anomalyFlag(z: Column, thresh: Double = 3.0): Column =
     abs(z) > lit(thresh)
 
-  /** P12 — numeric default fill after densification (etl/etl_main.py:244,268).
-    * The reference's "fill price cols with NaN" entries are no-ops and are
-    * simply omitted.
-    */
-  def fillZeros(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.fill(0, cols)
-
   /** P13 — export stringification (etl/etl_main.py:292): every column cast to
     * string with NULL → "". Used by the report sinks (S7).
     */

@@ -857,24 +857,6 @@ object Dedup {
         .select(col(idCol).as("id"), simhashReplayable64(textCol).as("sh")),
       maxHamming)
 
-  /** Near-dup pairs by SimHash Hamming distance within a blocking key.
-    * `bit_count(a XOR b)` is the Hamming distance; blocks bound the
-    * quadratic pair space. Use [[simhashBandedPairs]] unless a semantic
-    * block is itself part of the query (it caps pair search at the block,
-    * which banding deliberately does not).
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   blockCol: String, maxHamming: Int): DataFrame = {
-    val h = ScaleOps.fanOut(df, col(idCol))
-      .select(col(idCol).as("id"), col(blockCol).as("blk"),
-        simhash64(textCol).as("sh"))
-    h.as("a").join(h.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .withColumn("hamming", bit_count(col("a.sh").bitwiseXOR(col("b.sh"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("hamming"))
-  }
-
   /** Edit-distance fuzzy matching — the fourth near-dup modality next to
     * token-Jaccard, SimHash, and embedding-cosine: pairs within a blocking
     * key whose text HEADS are within `maxDist` Levenshtein edits. Edit

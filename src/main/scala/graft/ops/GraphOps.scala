@@ -377,10 +377,13 @@ object GraphOps {
     * 80 MB of cached edge blocks (~1.5 M edges), far below the raw
     * 20 M-row cap this replaces, and it scales with the session's own
     * broadcast sizing instead of ignoring it. A disabled auto-broadcast
-    * threshold (≤ 0) disables this probe too.
+    * threshold (≤ 0) disables this probe too, and so does an unknown
+    * size: zero cached bytes means no storage entry matched (blocks
+    * unpersisted or evicted, or no checkpoint under the frame at all),
+    * which says nothing about how big the edge list is.
     */
-  private def closingProbe(oriented: DataFrame,
-                           thresholdMultiple: Long = 8L): DataFrame = {
+  private[ops] def closingProbe(oriented: DataFrame,
+                                thresholdMultiple: Long = 8L): DataFrame = {
     val spark = oriented.sparkSession
     val probe = oriented.select(col("src").as("b"), col("dst").as("c"))
     val budget = thresholdMultiple * org.apache.spark.network.util.JavaUtils
@@ -396,7 +399,7 @@ object GraphOps {
     val bytes = spark.sparkContext.getRDDStorageInfo
       .filter(i => rddIds.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
-    if (budget > 0 && rddIds.nonEmpty && bytes <= budget) broadcast(probe)
+    if (budget > 0 && bytes > 0 && bytes <= budget) broadcast(probe)
     else probe
   }
 
@@ -826,7 +829,6 @@ object GraphOps {
     setRem(base.where(col("sup") < k - 2).select(col("u"), col("v")))
     var rounds = 0
     while (cnt > 0 && rounds < maxPeels) {
-      val __t0 = System.nanoTime()
       val waveCnt = cnt
       val remB = if (remRows.isDefined || cnt <= broadcastRem)
         broadcast(rem) else rem
@@ -906,9 +908,6 @@ object GraphOps {
               ovRows.isDefined && 2L * (k - 2) * cnt <= driverWaveCap)
             Some(withAqeOff(spark)(affectedPlan.collect()))
           else None
-        if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-          println(f"[truss]   affected collected in " +
-            f"${(System.nanoTime() - __t0) / 1e9}%.2f s (local=${affLocal.isDefined})")
         affLocal match {
           case Some(aRows) =>
             // DRIVER-LOCAL tail wave: the two jobs below (affected
@@ -926,9 +925,6 @@ object GraphOps {
             val got = withAqeOff(spark)(
               supportsFor(affected, adjAfter, broadcastFan = true)
                 .collect()).map(r => keyOf(r) -> r.getLong(2)).toMap
-            if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-              println(f"[truss]   supports collected in " +
-                f"${(System.nanoTime() - __t0) / 1e9}%.2f s")
             val supRows: Array[Row] = aRows.map { r =>
               Row(r.getLong(0), r.getLong(1),
                 got.getOrElse(keyOf(r), 0L))
@@ -976,9 +972,6 @@ object GraphOps {
         }
       }
       curCnt = curCnt - waveCnt
-      if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-        println(f"[truss] wave $rounds: removed $waveCnt, next $cnt, " +
-          f"${(System.nanoTime() - __t0) / 1e9}%.2f s")
       rounds += 1
     }
     require(cnt == 0,

@@ -21,44 +21,6 @@ class DocsSpec extends AnyFunSuite {
         " — update the README line(s)")
   }
 
-  test("README's full-bench total matches the durable artifact, when current") {
-    // Round-7 verdict finding 2: the README quoted 104.0 s while
-    // target/bench.json recorded 91.2 s — both true at different times,
-    // but a reader can only check one. Pin: whenever the artifact on this
-    // tree is a FULL record for the current query set, the README's
-    // "full bench totals **N s**" figure must be that artifact's total.
-    // Partial or stale artifacts (single-query iteration runs, a bench
-    // from before a query was added) make the claim uncheckable here —
-    // skip rather than false-alarm; the pin re-arms on the next full run.
-    val p = java.nio.file.Paths.get("target/bench.json")
-    assume(java.nio.file.Files.exists(p), "no bench artifact on this tree")
-    val bench = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    val benched = {
-      val it = bench.get("queries").fieldNames()
-      val b = Set.newBuilder[String]
-      while (it.hasNext) b += it.next()
-      b.result()
-    }
-    assume(benched == SparkEntry.queries.keySet,
-      "bench artifact is partial or stale — claim not checkable on this tree")
-    // The README sentence describes the graded sf0.1 record specifically;
-    // a full run on another SF writes the artifact but (correctly) leaves
-    // the README alone, so there is nothing to check against.
-    assume(bench.get("sf").asText().stripSuffix("/").endsWith("sf0.1"),
-      "bench artifact is for a different scale factor than the README claim")
-    val total = bench.get("value").asDouble()
-    val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("README.md")), "UTF-8")
-    val claim = """full bench totals \*\*([0-9.]+) s\*\*""".r
-    val claims = claim.findAllMatchIn(readme).map(_.group(1).toDouble).toList
-    assert(claims.nonEmpty,
-      "README no longer states a 'full bench totals **N s**' figure")
-    assert(claims.forall(c => math.abs(c - total) <= 0.1),
-      s"README claims full-bench total(s) $claims s but target/bench.json" +
-        f" records $total%.1f s — re-source the README figure from the artifact")
-  }
-
   test("README's 'N tests / M suites' claim matches the test sources") {
     // Round-8 verdict finding 3: the README said "301 tests / 28 suites"
     // while the suite ran 349/28. Round-12 verdict finding 3: the static

@@ -440,4 +440,35 @@ class GraphOpsSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(all === Seq((1L, 6L, 7L, 14L, 0.0)))
   }
+
+  private def broadcastHinted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.hints.strategy.contains(
+          org.apache.spark.sql.catalyst.plans.logical.BROADCAST)
+      case _ => false
+    }
+
+  test("closingProbe: a checkpoint whose blocks were unpersisted gets no broadcast hint") {
+    // zero cached bytes means the size is unknown, not that it is small
+    val cp = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "dd")
+      .localCheckpoint(true)
+    cp.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(blocking = true))
+    assert(!broadcastHinted(GraphOps.closingProbe(cp)))
+  }
+
+  test("closingProbe: a normally checkpointed edge list still broadcasts") {
+    // the checkpoint routine the triangle enumerations orient through;
+    // triangle_count's closing probe must stay map-side on a small graph
+    import org.apache.spark.sql.functions.{col, lit}
+    val e = GraphOps.canonicalEdges(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L)).toDF("a", "b"), "a", "b")
+    val oriented = ScaleOps.checkpointFanOut(
+      e.select(col("u").as("src"), col("v").as("dst"), lit(1L).as("dd")),
+      col("src"))
+    assert(broadcastHinted(GraphOps.closingProbe(oriented)))
+    assert(broadcastHinted(GraphOps.triangleCountsOf(e, GraphOps.nodeDegrees(e))))
+  }
 }

@@ -598,6 +598,40 @@ class StreamingAndMultimodalSpec extends SparkTestBase {
     assert(streamed.nonEmpty)
   }
 
+  test("pair-emitting stream loops equal their batch siblings and leave no working table") {
+    // Each streaming loop's union of read-back pairs and per-batch
+    // emissions must be the batch-incremental answer over the same
+    // persisted state: a missed refresh, a batch probing its own rows or
+    // a double append would show as a missing or extra pair.
+    val q = graft.SparkEntry.queries
+    def rows(name: String, cols: Seq[String]) =
+      q(name)(spark, sfTest).select(cols.map(col): _*).collect().toSet
+    for ((stream, batch) <- Seq(
+        "stream_neardup_incremental" -> "incremental_neardup_persisted",
+        "stream_simhash_incremental" -> "incremental_simhash_persisted",
+        "stream_frame_incremental" -> "incremental_frame_neardup",
+        "stream_winnow_incremental" -> "incremental_winnow_persisted",
+        "stream_cdc_incremental" -> "incremental_cdc_persisted")) {
+      val streamed = q(stream)(spark, sfTest)
+      val cols = streamed.columns.toSeq
+      val got = streamed.collect().toSet
+      assert(got === rows(batch, cols), s"$stream vs $batch")
+      assert(got.nonEmpty, s"$stream emitted no pairs")
+    }
+    // the cosine loop grades itself: every contract column is true
+    val cos = q("stream_cosine_incremental")(spark, sfTest)
+    val flags = cos.columns.filter(c => cos.schema(c).dataType ==
+      org.apache.spark.sql.types.BooleanType)
+    assert(flags.toSet === Set("stream_equals_full", "recall_ok",
+      "precision_ok"))
+    cos.collect().foreach(r => flags.foreach(c =>
+      assert(r.getAs[Boolean](c), s"stream_cosine_incremental: $c")))
+    val left = spark.catalog.listTables().collect()
+      .filter(t => t.name.startsWith("graft_stream_") && !t.isTemporary)
+      .map(_.name)
+    assert(left.isEmpty, s"working tables left behind: ${left.mkString(", ")}")
+  }
+
   test("multimodal: metadata-only byte length never touches the decoder") {
     val media = Seq((1L, "image/png", "abc".getBytes("UTF-8")))
       .toDF("media_id", "mime", "bytes")
